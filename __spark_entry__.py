@@ -17,6 +17,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from meds_polars_functions_spark.functions.tokenize import DEDUP, TEXT
+
 SF_SMOKE = "/root/testdata/sf0.001"
 
 # DuckDB prelude mapping events -> the MEDS measurement table shape.
@@ -1954,7 +1956,7 @@ def _clf_score_oracle_sql() -> str:
     return f"""
 WITH d AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+    list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                 x -> x <> '') AS ws
   FROM documents),
 f AS (
@@ -3559,9 +3561,7 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meds_polars_functions_spark.operators.similarity import brute_force_topk
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.array_remove(
-        F.split(F.lower(F.col("text")), r"[^a-z0-9']+"), ""
-    )
+    toks = TEXT.words(F.col("text"))
     qt = docs.filter(F.col("doc_id") < 4).select(
         F.col("doc_id").alias("query_id"), F.slice(toks, 1, 6).alias("terms")
     )
@@ -3594,10 +3594,10 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (round 9) cut at rank 20; RRF contributions 1/(60+rank) summed (two
 #: lists -> one commutative double add, bit-exact), round 9, ranked by
 #: (rrf desc, doc_id). Static SQL — reads only the registered views.
-_HYBRID_SEARCH_ORACLE_SQL = """
+_HYBRID_SEARCH_ORACLE_SQL = f"""
 WITH d AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+    list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                 x -> x <> '') AS ws
   FROM documents),
 qt AS (SELECT DISTINCT doc_id AS query_id, unnest(ws[1:6]) AS t
@@ -5482,13 +5482,13 @@ def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 #: Float-op order matches the Spark expression left-to-right; round(6)
 #: like the bigram_lm oracle.
 _KNESER_NEY_ORACLE_SQL: dict[str, str] = {
-    "kneser_ney_lm": """
+    "kneser_ney_lm": f"""
 WITH d AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+    list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                 x -> x <> '') AS ws
   FROM documents WHERE len(list_filter(string_split_regex(lower(text),
-    '[^a-z0-9'']+'), x -> x <> '')) >= 1),
+    {TEXT.sql_pattern}), x -> x <> '')) >= 1),
 firsts AS (SELECT doc_id, ws[1] AS w FROM d),
 bis AS (
   SELECT doc_id,
@@ -5863,7 +5863,7 @@ def _minhash_pairs_cte() -> str:
     b_lit = "[" + ",".join(str(b) for _, b in params) + "]"
     return f"""w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 sh AS (
   SELECT doc_id,
@@ -6303,7 +6303,7 @@ def _bpe_encode_oracle_sql(
         duckdb.sql(
             f"""
 SELECT word, count(*) AS freq FROM (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+  SELECT unnest(list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                 x -> x <> '')) AS word
   FROM '{path}') GROUP BY 1"""
         ).fetchall()
@@ -6376,7 +6376,7 @@ t{k} AS (
     final = f"t{len(merges)}" if merges else "t0"
     return f"""
 WITH w AS (
-  SELECT DISTINCT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+  SELECT DISTINCT unnest(list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                   x -> x <> '')) AS word
   FROM documents),
 t0 AS (
@@ -6494,17 +6494,17 @@ FROM s
         # Curation-v2 replay: the quality-gate, span-dedup and
         # temperature-mixture CTEs chained (each identical to its
         # standalone oracle, re-rooted on the previous stage's output).
-        "curation_v2": r"""
+        "curation_v2": fr"""
 WITH w AS (
   SELECT doc_id, text, lang,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS words
+    {TEXT.sql()} AS words
   FROM documents),
 stats AS (
   SELECT doc_id, text, lang,
     len(words) AS n_words,
     list_sum(list_transform(words, x -> length(x)))::DOUBLE
       / (CASE WHEN len(words) > 0 THEN len(words) END) AS mean_word_len,
-    length(regexp_replace(text, '[^.,;:!?''"()\[\]{}-]', '', 'g'))::DOUBLE
+    length(regexp_replace(text, '[^.,;:!?''"()\[\]{{}}-]', '', 'g'))::DOUBLE
       / (CASE WHEN length(text) > 0 THEN length(text) END) AS punct_ratio,
     length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE
       / (CASE WHEN length(text) > 0 THEN length(text) END) AS digit_ratio,
@@ -7072,17 +7072,17 @@ SELECT shard, bin, count(*) AS n_docs, sum(n)::BIGINT AS token_sum,
   round(sum(n) / 2048.0, 6) AS fill_ratio
 FROM b GROUP BY 1, 2
 """,
-        "corpus_curation": r"""
+        "corpus_curation": fr"""
 WITH w AS (
   SELECT doc_id, text,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS words
+    {TEXT.sql()} AS words
   FROM documents),
 stats AS (
   SELECT doc_id, text,
     len(words) AS n_words,
     list_sum(list_transform(words, x -> length(x)))::DOUBLE
       / (CASE WHEN len(words) > 0 THEN len(words) END) AS mean_word_len,
-    length(regexp_replace(text, '[^.,;:!?''"()\[\]{}-]', '', 'g'))::DOUBLE
+    length(regexp_replace(text, '[^.,;:!?''"()\[\]{{}}-]', '', 'g'))::DOUBLE
       / (CASE WHEN length(text) > 0 THEN length(text) END) AS punct_ratio,
     length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE
       / (CASE WHEN length(text) > 0 THEN length(text) END) AS digit_ratio,
@@ -7237,10 +7237,10 @@ SELECT patient_id, event_id, code,
                      ORDER BY oidx, event_id) AS rank_in_event
 FROM meds JOIN idx USING (code)
 """,
-        "text_quality": r"""
+        "text_quality": fr"""
 WITH w AS (
   SELECT doc_id, text,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS words
+    {TEXT.sql()} AS words
   FROM documents)
 SELECT doc_id,
   length(text) AS n_chars,
@@ -7248,7 +7248,7 @@ SELECT doc_id,
   len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens_ws,
   round(list_sum(list_transform(words, x -> length(x)))::DOUBLE
         / (CASE WHEN len(words) > 0 THEN len(words) END), 6) AS mean_word_len,
-  round(length(regexp_replace(text, '[^.,;:!?''"()\[\]{}-]', '', 'g'))::DOUBLE
+  round(length(regexp_replace(text, '[^.,;:!?''"()\[\]{{}}-]', '', 'g'))::DOUBLE
         / (CASE WHEN length(text) > 0 THEN length(text) END), 6) AS punct_ratio,
   round(length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE
         / (CASE WHEN length(text) > 0 THEN length(text) END), 6) AS digit_ratio,
@@ -7259,17 +7259,17 @@ SELECT doc_id,
         / (CASE WHEN len(words) > 0 THEN len(words) END), 6) AS stopword_ratio
 FROM w
 """,
-        "quality_filter": r"""
+        "quality_filter": fr"""
 WITH w AS (
   SELECT doc_id, text,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS words
+    {TEXT.sql()} AS words
   FROM documents),
 stats AS (
   SELECT doc_id,
     len(words) AS n_words,
     list_sum(list_transform(words, x -> length(x)))::DOUBLE
       / (CASE WHEN len(words) > 0 THEN len(words) END) AS mean_word_len,
-    length(regexp_replace(text, '[^.,;:!?''"()\[\]{}-]', '', 'g'))::DOUBLE
+    length(regexp_replace(text, '[^.,;:!?''"()\[\]{{}}-]', '', 'g'))::DOUBLE
       / (CASE WHEN length(text) > 0 THEN length(text) END) AS punct_ratio,
     length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE
       / (CASE WHEN length(text) > 0 THEN length(text) END) AS digit_ratio,
@@ -7284,10 +7284,10 @@ WHERE n_words BETWEEN 30 AND 100000
   AND stopword_ratio >= 0.02
   AND mean_word_len BETWEEN 3.0 AND 12.0
 """,
-        "tfidf_top_terms": """
+        "tfidf_top_terms": f"""
 WITH w AS (
   SELECT doc_id AS id,
-    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+    unnest(list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                        x -> length(x) >= 4)) AS word
   FROM documents),
 tf AS (SELECT id, word, count(*) AS tf FROM w GROUP BY 1, 2),
@@ -7311,10 +7311,10 @@ SELECT w0 AS window_start, event_type,
   count(*) AS n_events, round(sum(value), 6) AS value_sum
 FROM starts GROUP BY 1, 2
 """,
-        "language_id": """
+        "language_id": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS words
+    {TEXT.sql()} AS words
   FROM documents),
 scored AS (
   SELECT doc_id,
@@ -7342,10 +7342,10 @@ SELECT doc_id,
   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS n_tokens_bpe
 FROM documents
 """,
-        "doc_fingerprint": """
+        "doc_fingerprint": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS words
+    {TEXT.sql()} AS words
   FROM documents)
 SELECT doc_id,
   list_reduce(
@@ -7513,10 +7513,10 @@ SELECT b.doc_id, b.lang FROM b JOIN r USING (lang) WHERE bucket < rate
         # Novelty replay: same tokenization/5-gram CTE family as
         # ngram_jaccard; first-owner = min(doc_id) per shingle STRING
         # (Spark elects per xxhash64 — equal absent collisions).
-        "novelty_score": """
+        "novelty_score": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 sh AS (
   SELECT doc_id,
@@ -7568,10 +7568,10 @@ FROM ver WHERE jaccard >= 0.5 AND id_a < 400 AND id_b >= 400
 """.format(MINHASH_CTE=_minhash_pairs_cte()),
         # Containment replay: same shingle postings as ngram_jaccard,
         # directed pairs (a != b), divided by |A| only.
-        "containment": """
+        "containment": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 sh AS (
   SELECT doc_id,
@@ -7611,10 +7611,10 @@ GROUP BY 1
         # Blocklist replay: unigram membership + bigram-shingle phrase
         # membership against the same literal term lists; ::INT matches
         # Spark's int arithmetic.
-        "blocklist": """
+        "blocklist": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS words
+    {TEXT.sql()} AS words
   FROM documents),
 h AS (
   SELECT doc_id,
@@ -7631,11 +7631,11 @@ SELECT doc_id, n_hits FROM h WHERE n_hits >= 1
         # as clf_score, residual (0.5 - y) exact at zero init, weight =
         # -2^-8 * gradient; bucket -1 = bias. Buckets with no postings
         # emit weight 0 via the range left join.
-        "logreg_step": """
+        "logreg_step": f"""
 WITH w AS (
   SELECT doc_id,
     CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS words
+    {TEXT.sql()} AS words
   FROM documents),
 f AS (
   SELECT doc_id, y,
@@ -7664,10 +7664,10 @@ FROM (SELECT DISTINCT doc_id, y FROM x)
         # CDC replay: per-word portable hashes -> boundary flags ->
         # chunk index as an exclusive prefix sum -> chunk hash of the
         # space-joined words, then the shared-chunk aggregation.
-        "cdc_chunks": """
+        "cdc_chunks": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 t AS (
   SELECT doc_id, words[i] AS word, i AS pos,
@@ -7695,10 +7695,10 @@ FROM ch GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2
         # per 5-window = left fold keeping b when b.h <= a.h (later
         # element wins ties); distinct selected hashes per doc, then the
         # posting self-join.
-        "winnow_pairs": """
+        "winnow_pairs": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 g AS (
   SELECT doc_id,
@@ -7712,7 +7712,7 @@ sel AS (
     list_distinct(list_transform(range(0, greatest(len(hs) - 5, 0) + 1), p ->
       list_reduce(
         list_transform(range(p + 1, least(p + 5, len(hs)) + 1),
-                       i -> {'h': hs[i], 'i': i}),
+                       i -> {{'h': hs[i], 'i': i}}),
         (a, b) -> CASE WHEN b.h <= a.h THEN b ELSE a END).h)) AS fps
   FROM g WHERE len(hs) >= 1),
 fp AS (SELECT doc_id, unnest(fps) AS h FROM sel)
@@ -7721,10 +7721,10 @@ FROM fp a JOIN fp b ON a.h = b.h AND a.doc_id < b.doc_id
 GROUP BY 1, 2 HAVING count(*) >= 2
 """,
         "semantic_dedup": _semantic_dedup_oracle_sql(),
-        "repeated_spans": """
+        "repeated_spans": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 wins AS (
   SELECT doc_id, (i - 1)::INT AS start_word,
@@ -7793,7 +7793,7 @@ FROM ok JOIN part ON l_partkey = p_partkey
 WHERE p_brand NOT LIKE 'Brand#1%'
 GROUP BY 1, 2, 3
 """,
-        "repetition_stats": """
+        "repetition_stats": f"""
 WITH l AS (
   SELECT doc_id,
     list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS lines
@@ -7811,7 +7811,7 @@ line_stats AS (
   GROUP BY doc_id),
 w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS words
+    {TEXT.sql()} AS words
   FROM documents),
 bg AS (
   SELECT doc_id, words,
@@ -7844,10 +7844,10 @@ LEFT JOIN line_stats USING (doc_id)
 LEFT JOIN bg_mass USING (doc_id)
 LEFT JOIN wchars USING (doc_id)
 """,
-        "decontaminate": """
+        "decontaminate": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 sh AS (
   SELECT doc_id,
@@ -7907,10 +7907,10 @@ SELECT doc_id, n_sampled,
   AS features
 FROM c
 """,
-        "simhash_buckets": """
+        "simhash_buckets": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 h AS (
   SELECT doc_id,
@@ -7925,10 +7925,10 @@ sig AS (
 SELECT simhash, count(*) AS n_docs, min(doc_id) AS canonical_id
 FROM sig GROUP BY simhash HAVING count(*) > 1
 """,
-        "simhash_near_dup": """
+        "simhash_near_dup": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 h AS (
   SELECT doc_id,
@@ -7964,10 +7964,10 @@ SELECT doc_id, n_chars FROM (
   SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
   FROM docs) WHERE rn = 1
 """,
-        "ngram_jaccard": """
+        "ngram_jaccard": f"""
 WITH w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 sh AS (
   SELECT doc_id,
@@ -7989,10 +7989,10 @@ JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
 WHERE n_inter::DOUBLE / (sa.n + sb.n - n_inter) >= 0.4
 """,
-        "dedup_clusters": """
+        "dedup_clusters": f"""
 WITH RECURSIVE w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 sh AS (
   SELECT doc_id,
@@ -8052,10 +8052,10 @@ SELECT id, chunk_idx,
   md5(substr(text, s + 1, 1000)) AS chunk_md5
 FROM starts
 """,
-        "unigram_entropy": """
+        "unigram_entropy": f"""
 WITH w AS (
   SELECT doc_id,
-    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+    unnest(list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                        x -> x <> '')) AS word
   FROM documents),
 tf AS (SELECT doc_id, word, count(*) AS tf FROM w GROUP BY 1, 2)
@@ -8063,10 +8063,10 @@ SELECT doc_id,
   round(ln(sum(tf)) - sum(tf * ln(tf)) / sum(tf), 6) AS entropy
 FROM tf GROUP BY doc_id
 """,
-        "lm_score": """
+        "lm_score": f"""
 WITH t AS (
   SELECT doc_id,
-    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+    unnest(list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                        x -> x <> '')) AS w
   FROM documents),
 c AS (SELECT w, count(*)::BIGINT AS c FROM t GROUP BY w),
@@ -8075,10 +8075,10 @@ SELECT doc_id, count(*) AS n_tokens,
   round(avg(ln(c::DOUBLE / N)), 6) AS lm_score
 FROM t JOIN c USING (w) CROSS JOIN n GROUP BY doc_id
 """,
-        "near_dedup": """
+        "near_dedup": f"""
 WITH RECURSIVE w AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    {DEDUP.sql()} AS words
   FROM documents),
 sh AS (
   SELECT doc_id,
@@ -8558,13 +8558,13 @@ FROM (SELECT CAST(epoch_us(date_trunc('day', o_orderdate)) // 86400000000
       FROM orders GROUP BY 1)
 WINDOW w AS (ORDER BY day_num RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
 """,
-        "bigram_lm": """
+        "bigram_lm": f"""
 WITH d AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+    list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                 x -> x <> '') AS ws
   FROM documents WHERE len(list_filter(string_split_regex(lower(text),
-    '[^a-z0-9'']+'), x -> x <> '')) >= 1),
+    {TEXT.sql_pattern}), x -> x <> '')) >= 1),
 t AS (SELECT doc_id, unnest(ws) AS w FROM d),
 uni AS (SELECT w, count(*)::BIGINT AS cu FROM t GROUP BY w),
 n AS (SELECT sum(cu)::BIGINT AS N FROM uni),
@@ -8592,10 +8592,10 @@ scored AS (
 SELECT doc_id, count(*) AS n_tokens, round(avg(logp), 6) AS lm_score
 FROM scored GROUP BY doc_id
 """,
-        "dsir_weights": """
+        "dsir_weights": f"""
 WITH d AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+    list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                 x -> x <> '') AS ws
   FROM documents),
 bi AS (
@@ -8617,9 +8617,9 @@ lam AS (
 SELECT doc_id, count(*) AS n_feats, round(avg(llr), 6) AS dsir_weight
 FROM f JOIN lam USING (b) GROUP BY doc_id
 """,
-        "bpe_pair_counts": """
+        "bpe_pair_counts": f"""
 WITH w AS (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+  SELECT unnest(list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                 x -> x <> '')) AS word
   FROM documents),
 wf AS (SELECT word, count(*)::BIGINT AS freq FROM w GROUP BY word),
@@ -8640,10 +8640,10 @@ SELECT doc_id,
   row_number() OVER (ORDER BY md5(doc_id::VARCHAR || 'epoch0'), doc_id) AS pos
 FROM documents
 """,
-        "bm25_search": """
+        "bm25_search": f"""
 WITH d AS (
   SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
+    list_filter(string_split_regex(lower(text), {TEXT.sql_pattern}),
                 x -> x <> '') AS ws
   FROM documents),
 lens AS (SELECT doc_id, len(ws) AS dl FROM d),

@@ -101,6 +101,15 @@ TRACKED = [
     # span dedup → temperature mixture → per-lang totals) — the number
     # a real corpus-curation user cares about (VERDICT r3 item 9)
     "curation_v2",
+    # round 16: the seven queries the full-registry sweep found slow and
+    # round 16 fixed, tracked so they cannot regress unseen again
+    "bloom_semi_filter",
+    "simhash_buckets",
+    "simhash_near_dup",
+    "blocklist",
+    "logreg_step",
+    "embedding_near_dup",
+    "triangles",
 ]
 
 

@@ -26,16 +26,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# array_remove instead of a filter(...) lambda (round 16): the HOF is
-# CodegenFallback and forces the subtree interpreted per token.
-_WORDS = lambda c: F.array_remove(F.split(F.lower(c), r"[^a-z0-9']+"), "")  # noqa: E731
+from ..functions.tokenize import TEXT
 
 
 def word_freq_table(df: DataFrame, text_col: str) -> DataFrame:
     """(word, freq): the one corpus-sized aggregation. Everything after
     BPE setup runs on this table, never the corpus."""
     return (
-        df.select(F.explode(_WORDS(F.col(text_col))).alias("word"))
+        df.select(F.explode(TEXT.words(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -245,7 +243,7 @@ def bpe_encode(df: DataFrame, text_col: str, merges: list[tuple[str, str]]) -> D
     can consume another's output or input, so batch application equals
     the sequential order — a 32k-merge vocabulary encodes in far fewer
     table traversals than 32k."""
-    words = df.select(F.explode(_WORDS(F.col(text_col))).alias("word")).distinct()
+    words = df.select(F.explode(TEXT.words(F.col(text_col))).alias("word")).distinct()
     tab = words.select(
         "word",
         F.lit(1).alias("freq"),

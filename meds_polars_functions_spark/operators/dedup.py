@@ -20,6 +20,8 @@ Scale design:
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import DEDUP
+
 # Mersenne prime 2^31-1: modulus for the universal-hash family
 # h_j(x) = (a_j * x + b_j) mod P — the standard minhash construction.
 # 31-bit values keep a_j * h < 2^62, safely inside signed-64 arithmetic.
@@ -81,16 +83,6 @@ def exact_dup_groups(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _words_expr(text_col: str) -> F.Column:
-    """lowercase -> split on non-alphanumerics -> drop empties.
-
-    array_remove, not a filter(...) lambda (round 16): the HOF is
-    CodegenFallback and forces the subtree interpreted per token."""
-    return F.array_remove(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), ""
-    )
-
-
 def _ngrams_from_words(words: F.Column, n: int) -> F.Column:
     """Distinct sliding word n-grams over an ALREADY-BOUND words column.
 
@@ -118,14 +110,14 @@ def word_shingles(text_col: str, n: int = 3) -> F.Column:
     `shingle_table`, which binds the words array as a real column first —
     this inline form pays the quadratic slice-source re-evaluation
     described in `_ngrams_from_words`."""
-    return _ngrams_from_words(_words_expr(text_col), n)
+    return _ngrams_from_words(DEDUP.words(F.col(text_col)), n)
 
 
 def _shingles_udf(n: int):
     """Arrow-batched pandas UDF: text -> array<string> of DISTINCT word
     n-grams, first-occurrence order — bit-identical output to the
     ``array_distinct(transform(...))`` expression form (same tokenizer
-    regex as ``_words_expr``, same <n-words fallback to the whole-word
+    dialect, ``tokenize.DEDUP``, same <n-words fallback to the whole-word
     join), but vectorized: the expression form is CodegenFallback
     (interpreted per element) and measured ~8× slower at sf0.1 — the
     same finding that motivated ``_band_hash_udf``.
@@ -136,12 +128,10 @@ def _shingles_udf(n: int):
     non-empty filter for Catalyst to push below the Arrow stage, which
     would DUPLICATE this UDF's evaluation (observed: 2 ArrowEvalPython
     stages per side before the switch; plan test pins 1)."""
-    import re
-
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    token_re = re.compile(r"[^a-z0-9]+")
+    token_re = DEDUP.regex
 
     @pandas_udf("array<string>")
     def sh(texts: pd.Series) -> pd.Series:
@@ -204,7 +194,7 @@ def overfrequent_shingle_hashes(
 
     n_docs = df.count()
     cap = int(n_docs * max_doc_ratio)
-    wdf = df.select(_words_expr(text_col).alias("__w__"))
+    wdf = df.select(DEDUP.words(F.col(text_col)).alias("__w__"))
     posts = wdf.select(
         F.explode(_ngrams_from_words(F.col("__w__"), shingle_n)).alias("g")
     )
@@ -274,7 +264,6 @@ def _band_hash_udf(
     matrix is one numpy broadcast: (a[:,None] * h[None,:] + b[:,None]) % P,
     min over shingles. Shingle hashing is zlib.crc32 — C-speed and
     process-stable (unlike Python's salted str hash)."""
-    import re
     from zlib import crc32
 
     import numpy as np
@@ -302,7 +291,7 @@ def _band_hash_udf(
     params = _hash_params(num_hashes, seed)
     a = np.array([p[0] for p in params], dtype=np.int64)[:, None]
     b = np.array([p[1] for p in params], dtype=np.int64)[:, None]
-    token_re = re.compile(r"[^a-z0-9]+")
+    token_re = DEDUP.regex
     banned_arr = np.fromiter(banned, dtype=np.int64, count=len(banned))
 
     def doc_rows(texts):
@@ -648,9 +637,7 @@ def simhash(text_col: str, bits: int = 64, portable: bool = False) -> F.Column:
         raise ValueError("simhash supports at most 64 bits")
     if portable and bits > 60:
         raise ValueError("portable simhash supports at most 60 bits")
-    words = F.array_remove(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), ""
-    )
+    words = DEDUP.words(F.col(text_col))
     if portable:
         hashes = F.transform(
             words, lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long")
@@ -692,6 +679,11 @@ def simhash_table(
     ``df.select(id, simhash(...))`` but executed as explode + ONE
     map-side aggregation instead of nested higher-order lambdas.
 
+    Precondition: ``id_col`` is unique. The per-bit sums group by id, so
+    rows sharing an id are merged into ONE signature over their pooled
+    words (the expression form returns one row per input row). Not
+    checked here: a uniqueness check would cost an extra job.
+
     Why (round 16, guide §4.1): the expression form's per-bit
     ``aggregate`` lambda is CodegenFallback AND re-evaluates its input
     array per bit, so every word is re-hashed ``bits`` times interpreted
@@ -712,7 +704,7 @@ def simhash_table(
         raise ValueError("portable simhash supports at most 60 bits")
     w = df.select(
         F.col(id_col).alias("id"),
-        F.explode_outer(_words_expr(text_col)).alias("__w__"),
+        F.explode_outer(DEDUP.words(F.col(text_col))).alias("__w__"),
     )
     if portable:
         h = F.conv(F.substring(F.md5(F.col("__w__")), 1, 15), 16, 10).cast("long")
@@ -1521,8 +1513,6 @@ def repeated_substring_spans(
     table against it. O(words) rows shuffled per doc, constant per-row
     payload.
     """
-    import re as _re
-
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -1533,7 +1523,7 @@ def repeated_substring_spans(
     # ('0x'||substr(md5(win),1,15))::BIGINT DuckDB replay.
     from hashlib import md5 as _md5
 
-    token_re = _re.compile(r"[^a-z0-9]+")
+    token_re = DEDUP.regex
 
     @pandas_udf("array<long>")
     def window_hashes(texts: pd.Series) -> pd.Series:
@@ -1613,14 +1603,13 @@ def winnow_fingerprints(
     so DuckDB replays selection exactly (rightmost-min = ``b.h <= a.h``
     left-fold).
     """
-    import re as _re
     from hashlib import md5 as _md5
 
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    token_re = _re.compile(r"[^a-z0-9]+")
+    token_re = DEDUP.regex
 
     @pandas_udf("array<struct<h: long, pos: int>>")
     def winnow(texts: pd.Series) -> pd.Series:
@@ -1731,13 +1720,12 @@ def cdc_chunks(
     replay. Scale: one Arrow-batched map-side pass; only (id, chunk
     metadata, hash) rows leave the scan — never text.
     """
-    import re as _re
     from hashlib import md5 as _md5
 
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    token_re = _re.compile(r"[^a-z0-9]+")
+    token_re = DEDUP.regex
 
     def h60(s: str) -> int:
         return int(_md5(s.encode()).hexdigest()[:15], 16)

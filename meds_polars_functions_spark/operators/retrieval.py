@@ -26,8 +26,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import TEXT
 from .dedup import _spread
-from .text import _WORDS
 
 
 def _bm25_tf(words: DataFrame, term_set: DataFrame) -> DataFrame:
@@ -105,7 +105,7 @@ def bm25_topk(
     # one corpus scan instead of three.
     words = (
         _spread(docs, None)
-        .select(F.col(id_col).alias("id"), _WORDS(F.col(text_col)).alias("ws"))
+        .select(F.col(id_col).alias("id"), TEXT.words(F.col(text_col)).alias("ws"))
         .localCheckpoint(eager=False)
     )
     lens = words.select("id", F.size("ws").alias("dl"))

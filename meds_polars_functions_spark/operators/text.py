@@ -11,12 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# array_remove instead of a filter(...) lambda (round 16, guide §4.1):
-# the HOF is CodegenFallback and forces the whole split+lower subtree
-# into interpreted eval on every token of every document; removing ""
-# elements is the same set operation as filtering w != "", and the
-# native form whole-stage-codegens (corpus-verified bit-identical).
-_WORDS = lambda c: F.array_remove(F.split(F.lower(c), r"[^a-z0-9']+"), "")  # noqa: E731
+from ..functions.tokenize import TEXT
 
 # LM scoring join: broadcast the per-pair score table when the distinct
 # (v, w) pair count is provably at or below this bound (~50 B/row ->
@@ -84,16 +79,14 @@ def bpe_ish_token_count(text_col: str) -> F.Column:
 
 def _stopword_hits_udf(lang: str = "en"):
     """Arrow-batched stopword-occurrence counter (duplicates counted),
-    same tokenizer as ``_WORDS`` — replaces the interpreted per-word ×
+    ``tokenize.TEXT`` dialect — replaces the interpreted per-word ×
     per-stopword array scan in ``quality_stats`` (measured ~40% of the
     projection at sf0.1). Null text scores -1, mirroring the expression
     form's size(filter(null)) under non-ANSI sessions."""
-    import re
-
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    token_re = re.compile(r"[^a-z0-9']+")
+    token_re = TEXT.regex
     stops = frozenset(STOPWORDS[lang])
 
     def hits(texts):
@@ -118,7 +111,7 @@ def _stopword_hits_udf(lang: str = "en"):
 def _word_stats_udf(lang: str = "en"):
     """Arrow-batched word statistics: ONE Python tokenize pass yields
     struct<n_words int, sum_wlen long, hits long> (word count, summed
-    word length, stopword occurrences). Same tokenizer as ``_WORDS`` /
+    word length, stopword occurrences). ``tokenize.TEXT`` dialect, like
     ``_stopword_hits_udf`` (parity-pinned), null text yields null fields.
 
     Why one struct UDF instead of JVM word expressions (round 16, guide
@@ -131,12 +124,10 @@ def _word_stats_udf(lang: str = "en"):
     ArrowEvalPython evaluation however many times the predicate
     references it, and the stopword pass was already tokenizing in
     Python — the word stats now ride along for free."""
-    import re
-
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    token_re = re.compile(r"[^a-z0-9']+")
+    token_re = TEXT.regex
     stops = frozenset(STOPWORDS[lang])
 
     def stats(texts):
@@ -212,7 +203,7 @@ def _langid_best_expr(text_col: str) -> F.Column:
     vectorized UDF is parity-tested against (and for inline use on tiny
     frames); per-word × per-language interpreted filters make it the
     slow path on a corpus."""
-    words = _WORDS(F.col(text_col))
+    words = TEXT.words(F.col(text_col))
     scores = []
     for lang, stops in STOPWORDS.items():
         arr = F.array(*[F.lit(w) for w in stops])
@@ -229,12 +220,10 @@ def _langid_udf():
     tie rule (max hits, then lexicographically greatest lang) and its
     tokenizer (so non-ASCII stopword entries stay unreachable exactly
     as they are in the expression form, where the split consumes them)."""
-    import re
-
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    token_re = re.compile(r"[^a-z0-9']+")
+    token_re = TEXT.regex
     stops = {lang: frozenset(ws) for lang, ws in STOPWORDS.items()}
     langs = sorted(stops)  # deterministic iteration
 
@@ -283,7 +272,7 @@ def doc_fingerprint(text_col: str, mod: int = (1 << 61) - 1, base: int = 1_000_0
     fold (acc * base + xxhash64(word)) mod p. Order-sensitive (unlike a
     bag-of-words hash) and identically computable in any engine with a
     list fold — used for cross-engine content identity."""
-    words = _WORDS(F.col(text_col))
+    words = TEXT.words(F.col(text_col))
     return F.aggregate(
         words,
         F.lit(0).cast("long"),
@@ -340,7 +329,7 @@ def tf_idf_top_terms(
     words = df.select(
         F.col(id_col).alias("id"),
         F.explode(
-            F.filter(_WORDS(F.col(text_col)), lambda w: F.length(w) >= min_word_len)
+            F.filter(TEXT.words(F.col(text_col)), lambda w: F.length(w) >= min_word_len)
         ).alias("word"),
     )
     tf = words.groupBy("id", "word").agg(F.count(F.lit(1)).alias("tf"))
@@ -371,7 +360,7 @@ def portable_fingerprint(
     Pure integer arithmetic over unicode code points — computable
     identically in any SQL engine with list folds (used by the DuckDB
     correctness oracle; ``doc_fingerprint`` is the fast xxhash64 path)."""
-    words = _WORDS(F.col(text_col))
+    words = TEXT.words(F.col(text_col))
     word_hash = lambda w: F.aggregate(  # noqa: E731
         F.array_remove(F.split(w, ""), ""),
         F.lit(0).cast("long"),
@@ -392,7 +381,7 @@ def unigram_entropy(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     diverse. Posting-list formulation — shuffles (doc, word) pairs once;
     the text itself never re-shuffles."""
     words = df.select(
-        F.col(id_col).alias("id"), F.explode(_WORDS(F.col(text_col))).alias("w")
+        F.col(id_col).alias("id"), F.explode(TEXT.words(F.col(text_col))).alias("w")
     )
     tf = words.groupBy("id", "w").agg(F.count(F.lit(1)).alias("tf"))
     return (
@@ -432,7 +421,7 @@ def unigram_lm_score(
     (no distribution to score them under).
     """
     words = df.select(
-        F.col(id_col).alias("id"), F.explode(_WORDS(F.col(text_col))).alias("w")
+        F.col(id_col).alias("id"), F.explode(TEXT.words(F.col(text_col))).alias("w")
     )
     counts = words.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     total = counts.agg(F.sum("c").alias("N"))  # one row
@@ -505,7 +494,7 @@ def bigram_lm_score(
         F.arrays_zip(F.slice("ws", 1, n1).alias("v"), F.slice("ws", 2, n1).alias("w")),
     )
     stream = (
-        df.select(F.col(id_col).alias("id"), _WORDS(F.col(text_col)).alias("ws"))
+        df.select(F.col(id_col).alias("id"), TEXT.words(F.col(text_col)).alias("ws"))
         .filter(F.size("ws") >= 1)
         .select("id", F.explode(pairs_arr).alias("pr"))
         .select("id", F.col("pr.v").alias("v"), F.col("pr.w").alias("w"))
@@ -665,7 +654,7 @@ def kneser_ney_lm_score(
         F.arrays_zip(F.slice("ws", 1, n1).alias("v"), F.slice("ws", 2, n1).alias("w")),
     )
     stream = (
-        df.select(F.col(id_col).alias("id"), _WORDS(F.col(text_col)).alias("ws"))
+        df.select(F.col(id_col).alias("id"), TEXT.words(F.col(text_col)).alias("ws"))
         .filter(F.size("ws") >= 1)
         .select("id", F.explode(pairs_arr).alias("pr"))
         .select("id", F.col("pr.v").alias("v"), F.col("pr.w").alias("w"))
@@ -773,7 +762,7 @@ def dsir_weights(
     absent from the output."""
     def feats(frame: DataFrame) -> DataFrame:
         docs = frame.select(
-            F.col(id_col).alias("id"), _WORDS(F.col(text_col)).alias("ws")
+            F.col(id_col).alias("id"), TEXT.words(F.col(text_col)).alias("ws")
         ).filter(F.size("ws") >= 2)
         n1 = F.size("ws") - 1
         pairs = docs.select(
@@ -853,7 +842,7 @@ def bm25_scores(
     per-term df table are all tiny and broadcast. Only documents
     containing at least one query term appear in the output."""
     terms = F.array(*[F.lit(t) for t in query_terms])
-    docs = df.select(F.col(id_col).alias("id"), _WORDS(F.col(text_col)).alias("ws"))
+    docs = df.select(F.col(id_col).alias("id"), TEXT.words(F.col(text_col)).alias("ws"))
     lens = docs.select("id", F.size("ws").alias("dl"))
     stats = lens.agg(
         F.count(F.lit(1)).alias("N"), F.avg("dl").alias("avg_dl")
@@ -922,7 +911,7 @@ def hashed_linear_score(
 
     n = len(weights)
     w_arr = F.array(*[F.lit(float(x)) for x in weights])
-    ws = _WORDS(F.col(text_col))
+    ws = TEXT.words(F.col(text_col))
     docs = df.select(F.col(id_col), ws.alias("ws")).filter(F.size("ws") >= 1)
     n1 = F.size("ws") - 1
     bigrams = F.zip_with(
@@ -1021,7 +1010,7 @@ def repetition_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.array_sort(
             F.filter(F.split(t, r"\n"), lambda x: F.trim(x) != "")
         ).alias("__lines__"),
-        _WORDS(t).alias("__w__"),
+        TEXT.words(t).alias("__w__"),
     )
     step2 = step1.select(
         id_col,
@@ -1108,7 +1097,7 @@ def _hashed_features(
 
     from meds_polars_functions_spark.operators.dedup import _spread
 
-    ws = _WORDS(F.col(text_col))
+    ws = TEXT.words(F.col(text_col))
     # _spread (round 16): the unigram+bigram feature extraction is the
     # pipeline's CPU (interpreted zip_with per word) and runs in the
     # scan stage — a single-file corpus pinned it to one core (measured
@@ -1229,7 +1218,9 @@ def blocklist_hits(
     Phrases of k words are matched against the document's k-word
     shingles, so matches are token-exact (no substring false positives:
     banning "ass" never hits "associate") and counts include overlapping
-    occurrences. Map-side: the blocklist ships inside ONE Arrow-batched
+    occurrences. Words are the ``tokenize.TEXT`` dialect, apostrophes
+    kept ("slow's" is not a hit on "slow"), matching the oracle.
+    Map-side: the blocklist ships inside ONE Arrow-batched
     UDF closure, so gating 100 TB is a single scan with no corpus
     shuffle (``_spread`` round-robins a corpus only when it arrives in
     fewer partitions than the cluster has slots).
@@ -1247,8 +1238,6 @@ def blocklist_hits(
 
     Output: ``(id, n_hits)`` for documents with at least one hit — the
     drop list; anti-join it against the corpus to apply the gate."""
-    import re
-
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -1262,7 +1251,7 @@ def blocklist_hits(
                 " ".join(words)
             }
     lens = sorted(by_len.items())
-    token_re = re.compile(r"[^a-z0-9]+")
+    token_re = TEXT.regex
 
     def _n_hits(texts):
         out = []

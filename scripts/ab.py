@@ -1,5 +1,5 @@
 """First-class interleaved same-session A/B harness (VERDICT r4 item 8 —
-the generalization of ab_r2_vs_r4.py). Any perf claim in SCALE.md should
+the generalization of round 4's one-off A/B). Any perf claim in SCALE.md should
 ship with a table produced by this script: solo before/after runs on this
 shared box are dominated by host load (the round-2..4 lesson; see
 SCALE.md METHOD), while interleaving reference and current code inside

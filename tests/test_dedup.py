@@ -756,9 +756,9 @@ def test_shingle_udf_matches_expression_form(spark):
     # punctuation runs, repeated n-grams, short docs, empty, null, digits
     from pyspark.sql import functions as F
 
+    from meds_polars_functions_spark.functions.tokenize import DEDUP
     from meds_polars_functions_spark.operators.dedup import (
         _ngrams_from_words,
-        _words_expr,
         shingle_table,
     )
 
@@ -779,7 +779,7 @@ def test_shingle_udf_matches_expression_form(spark):
     }
     expr_out = {
         r["id"]: r["sh"]
-        for r in df.select("id", _words_expr("text").alias("__w__"))
+        for r in df.select("id", DEDUP.words(F.col("text")).alias("__w__"))
         .select("id", _ngrams_from_words(F.col("__w__"), 3).alias("sh"))
         .collect()
     }

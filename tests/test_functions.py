@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from meds_polars_functions_spark.functions.expr import (
@@ -319,6 +320,102 @@ def test_blocklist_hits_token_exact_and_phrases(spark):
     assert out == {2: 2, 3: 2}
 
 
+def test_blocklist_hits_keeps_apostrophes_like_its_oracle(spark):
+    """blocklist_hits and the registered blocklist oracle split words the
+    same way: apostrophes are kept, so "slow's" is not a hit on "slow"
+    (the registry fixture has no apostrophes, so only this frame shows
+    a dialect mismatch)."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+    from meds_polars_functions_spark.operators.text import blocklist_hits
+
+    rows = [
+        (1, "the slow's table scan"),
+        (2, "slow"),
+        (3, "it's slow"),
+        (4, "slow's slow's"),
+        (5, "hash join's plan"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        (r["id"], r["n_hits"])
+        for r in blocklist_hits(
+            df, "text", "doc_id", ["slow", "hash join", "table scan"]
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = sorted(
+        tuple(r) for r in con.execute(entry.oracle_sql()["blocklist"]).fetchall()
+    )
+    assert got == want
+    assert got == [(1, 1), (2, 1), (3, 1)]
+
+
+_DIALECT_INPUTS = [
+    "slow's", "it''s", "a1_b2-c3", "ß STRASSE", "ÀÉ café", "ΣΑΣ", "", None,
+]
+
+
+@pytest.mark.parametrize(
+    "name, pattern", [("TEXT", "[^a-z0-9']+"), ("DEDUP", "[^a-z0-9]+")]
+)
+def test_tokenizer_dialect_forms_agree(spark, name, pattern):
+    """The Spark expression, the Python regex and the DuckDB fragment of
+    each dialect return the same word list on hard strings."""
+    import duckdb
+
+    from meds_polars_functions_spark.functions import tokenize
+
+    d = getattr(tokenize, name)
+    assert d.pattern == pattern
+    inputs = [*_DIALECT_INPUTS, "İstanbul"]
+    df = spark.createDataFrame(list(enumerate(inputs)), "i int, t string")
+    got_spark = [
+        r["w"]
+        for r in df.select("i", d.words(F.col("t")).alias("w")).orderBy("i").collect()
+    ]
+    got_py = [
+        None if t is None else [w for w in d.regex.split(t.lower()) if w]
+        for t in inputs
+    ]
+    con = duckdb.connect()
+    got_duck = [
+        con.execute(f"SELECT {d.sql('t')} FROM (SELECT ?::VARCHAR AS t)", [t])
+        .fetchone()[0]
+        for t in inputs
+    ]
+    n = len(_DIALECT_INPUTS)
+    assert got_spark[:n] == got_py[:n] == got_duck[:n]
+    # expected divergence: DuckDB lowercases U+0130 to a plain "i"; Java
+    # and Python give "i" + U+0307, which the pattern splits on
+    assert got_spark[n] == got_py[n] == ["i", "stanbul"]
+    assert got_duck[n] == ["istanbul"]
+
+
+def test_tokenizer_patterns_live_only_in_tokenize_module():
+    """Drift guard: library and registry code import a word dialect from
+    functions/tokenize.py instead of spelling its pattern out (a copy is
+    how blocklist_hits once drifted from its oracle)."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    home = root / "meds_polars_functions_spark" / "functions" / "tokenize.py"
+    patterns = ("[^a-z0-9']+", "[^a-z0-9'']+", "[^a-z0-9]+")
+    files = [*root.glob("meds_polars_functions_spark/**/*.py"), root / "__spark_entry__.py"]
+    assert home in files
+    copies = [
+        f"{f.relative_to(root)}:{i}"
+        for f in files
+        if f != home
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if any(p in line for p in patterns)
+    ]
+    assert copies == []
+
+
 def test_language_id_udf_matches_expression_form(spark):
     # vectorized argmax must be bit-identical to the greatest-of-structs
     # expression form, incl. the tie rule (max hits, then lexicographically
@@ -376,9 +473,9 @@ def test_language_id_single_python_stage(spark):
 def test_stopword_hits_udf_matches_expression_form(spark):
     from pyspark.sql import functions as F
 
+    from meds_polars_functions_spark.functions.tokenize import TEXT
     from meds_polars_functions_spark.operators.text import (
         STOPWORDS,
-        _WORDS,
         _stopword_hits_udf,
     )
 
@@ -397,7 +494,7 @@ def test_stopword_hits_udf_matches_expression_form(spark):
         for r in df.select(
             "id",
             F.size(
-                F.filter(_WORDS(F.col("text")), lambda w: F.array_contains(en_stop, w))
+                F.filter(TEXT.words(F.col("text")), lambda w: F.array_contains(en_stop, w))
             ).alias("h"),
         ).collect()
     }

@@ -503,8 +503,8 @@ def test_bm25_topk_term_prune_is_broadcast_semi_before_shuffle(spark):
     (the exact expression bm25_topk checkpoints), and the final plan is
     pinned join-strategy-clean: every remaining join must broadcast; the
     single nested-loop join allowed is the one-row stats crossJoin."""
+    from meds_polars_functions_spark.functions.tokenize import TEXT
     from meds_polars_functions_spark.operators.retrieval import (
-        _WORDS,
         _bm25_tf,
         bm25_topk,
     )
@@ -517,7 +517,7 @@ def test_bm25_topk_term_prune_is_broadcast_semi_before_shuffle(spark):
     )
     # the seam: corpus tokens semi-pruned by the broadcast term set
     # BEFORE the (id, t) exchange
-    words = docs.select(F.col("doc_id").alias("id"), _WORDS(F.col("text")).alias("ws"))
+    words = docs.select(F.col("doc_id").alias("id"), TEXT.words(F.col("text")).alias("ws"))
     term_set = q.select(F.explode("terms").alias("t")).distinct()
     tf_plan = plan_of(_bm25_tf(words, term_set))
     assert "BroadcastHashJoin" in tf_plan and "LeftSemi" in tf_plan
