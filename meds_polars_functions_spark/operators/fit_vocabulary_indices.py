@@ -7,7 +7,8 @@ lexicographic rank (0 reserved for UNK), nulls sorting smallest.
 Spark mapping: ``row_number`` over a global ``orderBy(asc_nulls_first)``
 window. This is a single-partition window — acceptable *only* because code
 metadata is metadata-scale (≤ millions of rows), never fact-scale. The
-dedup check is a plain groupBy-count.
+dedup check is a plain groupBy-count whose duplicate groups (normally none)
+are collected in one action: a shuffle and a result stage, no limit scan.
 """
 
 from __future__ import annotations
@@ -35,8 +36,11 @@ def fit_vocabulary_indices(
     """Add ``code/vocab_index`` = lexicographic rank, 1-based (0 = UNK),
     nulls-first (reference fit_vocabulary_indices.py:102-187)."""
     keys = ["code", *code_modifiers]
-    if duplicate_codes(code_metadata, code_modifiers).limit(1).count() > 0:
-        raise ValueError("Code metadata has duplicate (code, modifiers) rows")
+    dups = duplicate_codes(code_metadata, code_modifiers).collect()
+    if dups:
+        raise ValueError(
+            f"Code metadata has duplicate (code, modifiers) rows, e.g. {dups[:5]}"
+        )
     w = Window.orderBy(*[F.asc_nulls_first(k) for k in keys])
     return code_metadata.withColumn(
         "code/vocab_index", F.row_number().over(w)

@@ -351,7 +351,9 @@ def k_core_decomposition(
     O(1)-rows sum probe per iteration — the same driver round-trip
     class as the kmeans trainer's convergence test), with ``max_iter``
     as a backstop (convergence is typically O(graph "depth"), tens of
-    rounds on real graphs). Lineage cut with localCheckpoint every
+    rounds on real graphs). Reaching ``max_iter`` without a round that
+    changes nothing raises ``RuntimeError``, like
+    ``connected_components``. Lineage cut with localCheckpoint every
     iteration (|nodes|-sized).
     """
     from pyspark.sql import Window
@@ -399,6 +401,7 @@ def k_core_decomposition(
     # edge (measured 12 MB -> ~1 MB per round at sf0.1), and the window
     # then sorts the compact count table, not the edge-sized one.
     w = Window.partitionBy("node").orderBy(F.col("__nc__").desc())
+    converged = False
     for it in range(max_iter):
         nbr = und.join(
             cores.select(F.col("node").alias("d"), F.col("coreness").alias("__nc__")),
@@ -428,12 +431,20 @@ def k_core_decomposition(
         new_sum = new.agg(F.sum("coreness")).collect()[0][0]
         cores = new
         if new_sum == prev_sum:
+            converged = True
             break
         prev_sum = new_sum
     # the returned frame is already a materialized checkpoint; the edge
     # cache can be released without any recompute hazard (ADVICE r13
     # item 5 lifetime class).
     und.unpersist()
+    if not converged:
+        # a partial fixpoint over-reports coreness (the H-update only
+        # lowers it), so handing it back would be silently wrong
+        raise RuntimeError(
+            f"k_core_decomposition did not converge in {max_iter} "
+            "iterations; raise max_iter"
+        )
     return cores
 
 

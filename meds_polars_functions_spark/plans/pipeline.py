@@ -18,6 +18,15 @@ polling barrier dissolve into the job DAG. What we keep:
   lineage, which matters for long pipelines at scale);
 - cache-hit resume: a stage whose checkpoint exists is read, not rerun
   (reference mapreduce/utils.py:173-182 output-exists check).
+
+Without ``checkpoint_dir`` the data track stays lazy, but each metadata
+stage's output is materialized once with an eager ``localCheckpoint``,
+as the reference writes each metadata table to a file once. Every later
+consumer (the metadata broadcasts of data stages, the next metadata
+stage) then reads stored rows instead of re-deriving the table from the
+cohort. This relies on the metadata-scale contract: a metadata table is
+≤ millions of rows, never fact-scale. The stored blocks live as long as
+the frames ``run()`` returns (and anything derived from them) are in use.
 """
 
 from __future__ import annotations
@@ -35,7 +44,10 @@ class Stage:
     fn: Callable[..., DataFrame]
     #: "data" stages transform the measurement table; "metadata" stages
     #: consume the data track and replace the metadata track (the
-    #: reference's is_metadata classification, utils.py:141-180).
+    #: reference's is_metadata classification, utils.py:141-180). A
+    #: metadata output must be metadata-scale (≤ millions of rows): without
+    #: a checkpoint_dir it is materialized once in executor storage, which
+    #: lives as long as the returned frames.
     kind: str = "data"
     kwargs: dict = field(default_factory=dict)
     #: metadata stages receive the current metadata track too when True.
@@ -70,6 +82,9 @@ class Pipeline:
                 if ckpt:
                     out.write.mode("overwrite").parquet(ckpt)
                     out = spark.read.parquet(ckpt)
+                elif stage.kind == "metadata":
+                    # eager, so the cut is complete whatever reads it first
+                    out = out.localCheckpoint()
             if stage.kind == "metadata":
                 metadata = out
             else:

@@ -237,6 +237,21 @@ def test_verify_k_core_flags_flip_on_corruption(spark):
     assert bad.filter(~F.col("fixpoint_ok") | ~F.col("core_prop_ok")).count() > 0
 
 
+def test_k_core_raises_when_max_iter_cuts_the_fixpoint(spark):
+    """Triangle + tail: node 2 starts at degree 3 and settles at coreness
+    2, so the fixpoint needs a round that lowers it and a round that
+    confirms nothing changed. One round cannot converge: the operator
+    must raise like ``connected_components`` rather than return the
+    over-reported partial state, and must release its edge cache first."""
+    from meds_polars_functions_spark.operators.graph import k_core_decomposition
+
+    df = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3), (3, 4)], ["src", "dst"])
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="did not converge in 1 iterations"):
+        k_core_decomposition(df, max_iter=1)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def _brute_stress(edges, sources):
     """Reference sampled stress: for each source, BFS sigma + explicit
     shortest-path continuation counts; stress(v) = sum over s != v of

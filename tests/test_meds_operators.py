@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from meds_polars_functions_spark.operators.aggregate_code_metadata import (
@@ -166,6 +167,23 @@ def test_fit_vocabulary_indices(meds_df):
     assert codes == sorted(codes)
     idxs = [i for _, i in sorted(rows, key=lambda t: t[0])]
     assert idxs == sorted(idxs) and min(idxs) == 1
+
+
+def test_fit_vocabulary_indices_rejects_duplicate_codes(spark):
+    """(code, *modifiers) must be unique (reference
+    fit_vocabulary_indices.py:92-99): a repeated code raises, while the
+    same code under different modifier values is distinct."""
+    meta = spark.createDataFrame(
+        [("HR", "icu"), ("HR", "ward"), ("TEMP", None)],
+        "code string, unit string",
+    )
+    with pytest.raises(ValueError, match="duplicate"):
+        fit_vocabulary_indices(meta)
+    got = sorted(
+        (r["code"], r["unit"], r["code/vocab_index"])
+        for r in fit_vocabulary_indices(meta, code_modifiers=["unit"]).collect()
+    )
+    assert got == [("HR", "icu", 1), ("HR", "ward", 2), ("TEMP", None, 3)]
 
 
 def test_normalization(meds_df):

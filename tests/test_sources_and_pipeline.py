@@ -250,6 +250,41 @@ def test_pipeline_checkpoint_resume(tmpdir, spark, meds_df):
     assert data2.count() == data1.count()
 
 
+def test_pipeline_reads_metadata_from_stored_rows(tmpdir, spark, meds_df):
+    """Without a checkpoint_dir the metadata track is materialized once, so
+    the data stages that broadcast it read stored rows: the returned data
+    track's plan holds no Aggregate (a lazy metadata track would put the
+    code-metadata rollup inside both broadcasts). Rows match the
+    checkpointed run."""
+    from meds_polars_functions_spark.plans.registry import build_stages
+
+    cfg = {
+        "stages": [
+            "filter_patients",
+            "aggregate_code_metadata",
+            "filter_measurements",
+            "occlude_outliers",
+        ],
+        "stage_configs": {
+            "filter_patients": {"min_measurements_per_patient": 5},
+            "filter_measurements": {"min_patients_per_code": 2},
+            "occlude_outliers": {"stddev_cutoff": 1.0},
+        },
+    }
+    data, meta = Pipeline(build_stages(cfg)).run(spark, meds_df)
+    plan = data._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in plan, plan
+    ref, ref_meta = Pipeline(
+        build_stages(cfg), checkpoint_dir=os.path.join(tmpdir, "ckpt")
+    ).run(spark, meds_df)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    assert rows(data) == rows(ref) and len(rows(data)) > 0
+    assert rows(meta) == rows(ref_meta)
+
+
 def test_write_parquet_partitioned(tmpdir, spark, meds_df):
     from meds_polars_functions_spark.operators.split_patients import (
         harvest_patient_ids,

@@ -870,19 +870,19 @@ def test_staged_kcore_iteration_binds(spark):
     # sf0.01, 5 at sf0.1 — the oracle's 10-round unroll note), so the
     # multi-round bindingness is pinned on a path graph, where the
     # H-iteration provably needs ~len/2 rounds (coreness-1 information
-    # walks inward one hop per round):
+    # walks inward one hop per round). A run cut short raises instead of
+    # returning its partial table, so "one H pass is not the fixpoint"
+    # reads as: the second round still changes the table, i.e. a
+    # two-round run does not converge.
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], ["src", "dst"]
     )
     fix_p = {
         r["node"]: r["coreness"] for r in k_core_decomposition(path).collect()
     }
-    one_p = {
-        r["node"]: r["coreness"]
-        for r in k_core_decomposition(path, max_iter=1).collect()
-    }
     assert all(v == 1 for v in fix_p.values())  # a path is pure 1-core
-    assert fix_p != one_p, "one H pass already at fixpoint on a 10-path"
+    with pytest.raises(RuntimeError, match="did not converge"):
+        k_core_decomposition(path, max_iter=2)
 
 
 def test_staged_stress_centrality_matches_oracle_strict(spark, con):
